@@ -17,9 +17,11 @@ object TempDirs {
     * dirs) on tmpfs when /dev/shm probes as RAM — entry-internal staging
     * and throwaway streaming checkpoints belong on the same scratch tier,
     * not on whatever disk backs java.io.tmpdir (measured: each
-    * micro-batch pays 100-400 ms of RocksDB changelog + WAL fsync against
-    * ext4 /tmp). Ignored once the root exists; correctness runs (Verify)
-    * set no hint and keep the default placement.
+    * micro-batch paid 100-400 ms of RocksDB changelog + WAL commits against
+    * ext4 /tmp, most of it the process spawns of Hadoop's local FS that
+    * [[graft.streaming.LocalCheckpointFiles]] now avoids). Ignored once
+    * the root exists; correctness runs (Verify) set no hint and keep the
+    * default placement.
     */
   @volatile private var rootHint: Option[Path] = None
 

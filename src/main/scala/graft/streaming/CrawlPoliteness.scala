@@ -65,7 +65,7 @@ class DomainPolitenessProcessor(cap: Int)
     seen = getHandle.getMapState[String, Boolean](
       "seen", Encoders.STRING, Encoders.scalaBoolean, TTLConfig.NONE)
     held = getHandle.getListState[FetchCand](
-      "held", Encoders.product[FetchCand], TTLConfig.NONE)
+      "held", DomainPolitenessProcessor.CandEncoder, TTLConfig.NONE)
   }
 
   /** Admit from `buf` (the held queue ++ this trigger's fresh rows,
@@ -140,6 +140,11 @@ class DomainPolitenessProcessor(cap: Int)
       expiredTimerInfo: ExpiredTimerInfo): Iterator[FetchAdmit] =
     drain(math.max(timerValues.getCurrentWatermarkInMs(),
       expiredTimerInfo.getExpiryTimeInMs()), Array.empty)
+}
+
+object DomainPolitenessProcessor {
+  /** Built once per JVM, not per `init` (see [[FadsProcessor.SnapEncoder]]). */
+  val CandEncoder: org.apache.spark.sql.Encoder[FetchCand] = Encoders.product[FetchCand]
 }
 
 /** The ONLINE politeness loop: the frontier's candidate feed replayed as
@@ -233,7 +238,7 @@ object CrawlPoliteness {
       .join(crawled, Seq("canon"), "left")
       .where("already IS NULL")
       .selectExpr("lid", "domain", "canon", "ts_ms", "delay_ms")
-      .as[FetchCand](Encoders.product[FetchCand])
+      .as[FetchCand](DomainPolitenessProcessor.CandEncoder)
     gated.groupByKey(_.domain)(Encoders.STRING)
       .transformWithState(
         new DomainPolitenessProcessor(CrawlFrontier.FrontierCap),

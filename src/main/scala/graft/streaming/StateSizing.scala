@@ -6,8 +6,12 @@ import org.apache.spark.sql.SparkSession
   *
   * A streaming query's stateful operators keep ONE state-store instance
   * per shuffle partition (stream-stream joins keep four), and EVERY
-  * trigger pays each instance's load + commit (with RocksDB: changelog
-  * fsync) whether or not the partition holds a single key. At the bench
+  * trigger pays each instance's load + commit (with RocksDB: one changelog
+  * file written and renamed) whether or not the partition holds a single
+  * key. The timings below were measured under Spark's default checkpoint
+  * manager, where each commit's file creation and rename spawned `chmod`
+  * and `readlink` processes: the per-commit cost was those spawns, not
+  * the changelog fsync ([[LocalCheckpointFiles]] removes them). At the bench
   * session's `spark.sql.shuffle.partitions = 32` a 4-trigger entry over a
   * few thousand rows commits 128+ mostly-empty RocksDB stores — measured
   * 46 s for the 5-trigger outer join before it pinned 4 partitions

@@ -120,9 +120,11 @@ object StreamJoin {
     val qn = "graft_stream_outer_join"
     // stream-stream joins keep FOUR state-store instances per shuffle
     // partition; at the session's 32 partitions that is 128 RocksDB
-    // stores paying the per-trigger changelog-fsync floor (the streamdiag
-    // finding) — measured 46 s for a 5-trigger query. 4 partitions = 16
-    // stores matches the data volume (the FadsStream set/restore pattern)
+    // stores paying the per-trigger changelog-commit floor (the streamdiag
+    // finding; the commit's cost was mostly process spawns in Hadoop's
+    // local FS, see LocalCheckpointFiles) — measured 46 s for a 5-trigger
+    // query. 4 partitions = 16 stores matches the data volume (the
+    // FadsStream set/restore pattern)
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     // set AND start() inside the try: if plan analysis or start() throws,
     // the finally still restores the session-wide partition count (the
